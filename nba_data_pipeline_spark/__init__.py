@@ -12,10 +12,12 @@ Layout:
     functions/  — scalar expression library (regex extraction, odds math, text)
     operators/  — DataFrame->DataFrame operators (normalize, coerce, dedup,
                   similarity, text analysis, analytics, completeness gates)
-    sources/    — ingestion seams (html tables, csv, config)
-    streaming/  — Structured Streaming restatements of the polling loops
+    sources/    — ingestion seams (html tables, csv, config, the polldir
+                  streaming source)
     plans/      — the query catalog: every SURVEY §2 operator as a named
-                  query with a DuckDB oracle SQL twin
+                  query with a DuckDB oracle SQL twin; the Structured
+                  Streaming restatements of the polling loops live in
+                  plans/streaming_plans.py
 """
 
 __version__ = "0.1.0"

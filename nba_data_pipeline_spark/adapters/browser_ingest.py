@@ -8,10 +8,10 @@ Playwright poll-until-the-JS-table-settles readiness loop
 wait-for-complete-file export flow (ctg_export_league.py:270-330). SURVEY
 §7.4 keeps that automation OUTSIDE the engine: everything after the browser
 is the landed-file seam (sources/html_table.py, sources/html_datasource.py,
-streaming/polling.py). This module is the adapter that connects the two —
-the protocol, the waiting/walking/landing logic, and import-gated wrappers
-for the real drivers — so a reference user porting their first-touch
-scripts has a tested home for them.
+sources/poll_datasource.py). This module is the adapter that connects the
+two — the protocol, the waiting/walking/landing logic, and import-gated
+wrappers for the real drivers — so a reference user porting their
+first-touch scripts has a tested home for them.
 
 Design rules:
 
@@ -25,9 +25,9 @@ Design rules:
   so tests (and fixture synthesis inside catalog entries) run instantly
   and reproducibly.
 * **Atomic landing.** Pages land via write-to-temp + ``os.replace`` so the
-  engine's polling source (streaming/polling.py, SRC8) can never observe a
-  torn file — the same contract the reference's download waiter enforces
-  by watching for size-stable files.
+  engine's polling source (sources/poll_datasource.py, SRC8) can never
+  observe a torn file — the same contract the reference's download waiter
+  enforces by watching for size-stable files.
 """
 
 from __future__ import annotations

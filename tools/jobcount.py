@@ -71,7 +71,7 @@ def main() -> int:
                 "overwrite"
             ).save()
             dt = time.time() - t0
-            sc.setJobGroup(None, None)
+            sc._jsc.clearJobGroup()
             jobs = sc.statusTracker().getJobIdsForGroup(group)
             out[name] = {"jobs": len(jobs), "sec_warm": round(dt, 2)}
             print(f"{name}: jobs={len(jobs)} sec_warm={dt:.2f}", flush=True)
