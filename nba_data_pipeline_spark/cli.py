@@ -265,22 +265,25 @@ def cmd_scrape_teams(args: argparse.Namespace) -> int:
             cells.getItem(3).cast("int").alias("AST"),
         )
     )
-    typed = normalize_columns(typed)
+    # cached: the gate and the sink share one htmltable scan
+    typed = normalize_columns(typed).cache()
+    try:
+        # 3. GATE: every (team, page) cell present — all-or-nothing
+        # (DEFENSEVSPOSTION.PY:575-598); nothing lands on failure.
+        expected = [(t, p) for t in team_list for p in TEAM_PAGES]
+        report = check_cell_presence(typed, ["team", "page"], expected)
+        if not report.ok:
+            print(f"ERROR: incomplete scrape, missing {report.failures[:5]}",
+                  file=sys.stderr)
+            raise CompletenessError(str(report.failures[:5]))
 
-    # 3. GATE: every (team, page) cell present — all-or-nothing
-    # (DEFENSEVSPOSTION.PY:575-598); nothing lands on failure.
-    expected = [(t, p) for t in team_list for p in TEAM_PAGES]
-    report = check_cell_presence(typed, ["team", "page"], expected)
-    if not report.ok:
-        print(f"ERROR: incomplete scrape, missing {report.failures[:5]}",
-              file=sys.stderr)
-        raise CompletenessError(str(report.failures[:5]))
-
-    # 4. SINK: the literal reference tree.
-    paths = write_team_page_tree(
-        typed, args.output, date_str=date_str,
-        team_col="team", page_col="page", order_col="row_idx",
-    )
+        # 4. SINK: the literal reference tree.
+        paths = write_team_page_tree(
+            typed, args.output, date_str=date_str,
+            team_col="team", page_col="page", order_col="row_idx",
+        )
+    finally:
+        typed.unpersist()
     for p in paths:
         print(f"Saved to {p}")
     print(f"{len(paths)} page file(s) under {args.output}")
@@ -382,19 +385,10 @@ def cmd_props(args: argparse.Namespace) -> int:
     if args.prop_type in ("game", "both"):
         frames.append(("game", game))
 
-    landed: list[str] = []
-    for prop_type, df in frames:
-        landed.extend(
-            write_matchup_tree(
-                df.withColumn("prop_type", F.lit(prop_type)),
-                args.output,
-                date_str=date_str,
-                timestamp=ts,
-                matchup_col="matchup",
-                proptype_col="prop_type",
-                order_col="row_idx",
-            )
-        )
+    landed = write_matchup_tree(
+        frames, args.output, date_str=date_str, timestamp=ts,
+        matchup_col="matchup", order_col="row_idx",
+    )
     for p in landed:
         print(f"Saved to: {p}")
     print(f"{len(landed)} matchup file(s) under {args.output}")
@@ -431,20 +425,11 @@ def cmd_prompts(args: argparse.Namespace) -> int:
     if args.prop_type in ("game", "both"):
         frames.append(("game_props", game))
 
-    landed: list[str] = []
-    for prop_type, df in frames:
-        landed.extend(
-            write_prompt_tree(
-                df.withColumn("prop_type", F.lit(prop_type)),
-                args.output,
-                date_str=date_str,
-                timestamp=ts,
-                matchup_col="matchup",
-                proptype_col="prop_type",
-                order_col="row_idx",
-                url="https://app.hardrock.bet/nba",
-            )
-        )
+    landed = write_prompt_tree(
+        frames, args.output, date_str=date_str, timestamp=ts,
+        matchup_col="matchup", order_col="row_idx",
+        url="https://app.hardrock.bet/nba",
+    )
     for p in landed:
         print(f"Saved to: {p}")
     print(f"{len(landed)} prompt document(s) under {args.output}")

@@ -685,12 +685,16 @@ def d5_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d5_cc_clusters_multipart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D5e at the CLUSTER-SCALE setting: identical semantics (and oracle) to
     ``d5_cc_clusters`` but the closure runs ``connected_components`` with
-    ``num_partitions=4`` — the sharded-DSU path a 100 TB near-dup subgraph
-    actually takes: per-partition union-find, edge contraction between
-    rounds, O(log P) convergence. Catalog-level proof that the
-    multi-partition contraction loop reaches the same fixpoint the
-    recursive-CTE oracle computes (the 1-partition variant exercises only
-    the single-pass fast path)."""
+    ``num_partitions=4`` — the sharded-DSU shape a 100 TB near-dup subgraph
+    takes. With the documents footer count as ``node_bound`` it runs the
+    TWO-LEVEL form at every SF up to 500k documents (4 × n_docs within the
+    2M finish threshold): 4 parallel per-partition union-finds, then one
+    single-task DSU over their pointer rows. Catalog-level proof that this
+    sharded path reaches the same fixpoint the recursive-CTE oracle
+    computes (the 1-partition variant exercises only the single-pass
+    path). Past that bound the general contraction loop (edge contraction
+    between rounds, O(log P) convergence) runs instead; no catalog SF here
+    reaches it, so only the operator's unit tests cover it."""
     # single-row-group table: shuffle raw text once so the Python
     # shingling/tokenize pass runs at session parallelism, not in the
     # scan's lone task (same rationale as text_plans._docs_wide)

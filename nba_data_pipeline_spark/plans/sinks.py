@@ -470,9 +470,9 @@ def snk11_reference_layout_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     must reconstitute them from paths, and every row must survive the
     envelope round-trip — the aggregate hash-matches the base tables.
 
-    Scale shape: the envelope is a grouped aggregate and the staging write
-    a partitioned Spark JSON sink (fact-grain work all distributed); the
-    layout finalize and this multiLine read-back are one small file per
+    Scale shape: the envelope is a grouped aggregate serialized by
+    ``to_json`` in executors (fact-grain work all distributed); the
+    streamed leaf pass and this multiLine read-back are one small file per
     (team, page) LEAF — dimension grain, bounded at any corpus size."""
     root = _snk11_tree(spark, sf_dir)
     docs = (
@@ -561,9 +561,9 @@ def snk12_insights_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``metadata.total_insights`` must equal its actual row count — the
     aggregate hash-matches the base tables.
 
-    Scale shape: same contract as SNK11 — grouped envelope + partitioned
-    staging write are fact-grain distributed; finalize and this multiLine
-    read-back touch one small file per TEAM (dimension grain)."""
+    Scale shape: same contract as SNK11 — grouped envelope and its JSON
+    serialization are fact-grain distributed; the leaf pass and this
+    multiLine read-back touch one small file per TEAM (dimension grain)."""
     root = _snk12_tree(spark, sf_dir)
     docs = (
         spark.read.option("multiLine", "true")
@@ -677,9 +677,10 @@ def snk13_bref_stats_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     tables. Teams present in only one source table are excluded exactly
     like the oracle's inner join.
 
-    Scale shape: per-table grouped envelope + partitionBy staging are
-    fact-grain distributed; the finalize and this multiLine read-back
-    touch one small document per TEAM (dimension grain, ≤30 leaves)."""
+    Scale shape: the per-table grouped envelopes and their JSON
+    serialization are fact-grain distributed, all tables in one streamed
+    pass; the leaf pass and this multiLine read-back touch one small
+    document per TEAM (dimension grain, ≤30 leaves)."""
     root = _snk13_tree(spark, sf_dir)
     docs = (
         spark.read.option("multiLine", "true")
@@ -877,7 +878,7 @@ def snk14_dvp_matrix_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the matrix is dimension grain (600 rows) but its stat
     values aggregate the full customer table, so the distributed stages
-    scale with the fact table while the document finalize stays O(20
+    scale with the fact table while the document's leaf pass stays O(20
     leaves)."""
     from nba_data_pipeline_spark.operators.dvp import (
         DVP_POSITIONS,

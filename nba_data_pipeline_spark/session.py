@@ -13,6 +13,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(total_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: $SPARK_DRIVER_MEMORY, else 60% of the
+    machine's physical memory (``total_bytes``) in whole GB, at least 1g and
+    at most 16g. In local mode the driver JVM runs every task, and a heap
+    sized past the machine lets it grow until the host kills it."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    if total_bytes is None:
+        total_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, int(total_bytes * 0.6) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "nba_data_pipeline_spark",
     cpus: int | None = None,
@@ -41,7 +53,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

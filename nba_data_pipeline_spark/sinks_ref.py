@@ -13,13 +13,12 @@ the reference's exact folder trees:
   (nba_props_scraper.py:824-872: X13-sanitized folder name, metadata
   envelope inside the document).
 
-Both writers here keep the CONTENT path distributed — the envelope is a
-grouped aggregate and the staging write is a Spark ``partitionBy`` JSON
-sink — and finish with a driver-side layout pass whose cost is bounded by
-the DIMENSION grain (#teams × #pages, #matchups × #prop-types), never the
-fact grain: it renames/pretty-prints one small envelope file per leaf.
-At 100 TB the heavy lifting (grouping, serialization) happened in
-executors; the finalize touches O(leaves) files.
+Every writer keeps the CONTENT path distributed — the envelope is a grouped
+aggregate serialized by ``to_json`` in executors — and streams the leaves to
+the driver in one pass (:func:`_place_leaves`) that pretty-prints one small
+document per leaf: O(leaves) files, the DIMENSION grain (#teams × #pages,
+#matchups × #prop-types), never the fact grain, with one result partition
+held in the driver at a time.
 """
 
 from __future__ import annotations
@@ -28,9 +27,14 @@ import json
 import os
 import re
 import shutil
+from collections.abc import Callable
+from functools import reduce
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+_EMPTY_KEY = "null or empty leaf key in column"
 
 
 def sanitize_component(text: str, max_len: int = 80) -> str:
@@ -42,6 +46,12 @@ def sanitize_component(text: str, max_len: int = 80) -> str:
     return re.sub(r"^_|_$", "", collapsed)[:max_len]
 
 
+def _q(c: str) -> str:
+    """Backtick-quote: a '.' in a name (a caller-chosen header separator)
+    would otherwise parse as a struct access."""
+    return "`" + c.replace("`", "``") + "`"
+
+
 def _envelope(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     """One row per key: every non-key column packed into a deterministically
     ordered ``rows`` array (collect_list alone is partition-order dependent;
@@ -49,74 +59,52 @@ def _envelope(df: DataFrame, key_cols: list[str], order_col: str) -> DataFrame:
     payload = [c for c in df.columns if c not in key_cols]
     if order_col not in payload:
         raise ValueError(f"order_col {order_col!r} must be a payload column")
-    # Key columns become partitionBy directory components downstream, where
-    # Spark takes the NAME verbatim — a dotted key would silently diverge
-    # from the quoted groupBy resolution. Reject at the seam.
-    for k in key_cols:
-        if "." in k:
-            raise ValueError(
-                f"key column {k!r} contains '.': partitionBy cannot address "
-                "dotted names — rename the key column before the sink"
-            )
     ordered_first = [order_col, *[c for c in payload if c != order_col]]
-    # backtick-quote: payload names may contain '.' (a caller-chosen header
-    # separator), which an unquoted F.col parses as a struct access. Key
-    # columns get the same quoting in groupBy (dots are rejected above, but
-    # other specials — spaces, hyphens — still need it).
-    def q(c: str) -> str:
-        return "`" + c.replace("`", "``") + "`"
-
-    return df.groupBy(*[F.col(q(c)) for c in key_cols]).agg(
+    # a null or empty key would name a path component: fail map-side, so
+    # the write stops before any leaf is placed (see _place_leaves)
+    keys = [
+        F.when(F.coalesce(F.col(_q(c)).cast("string"), F.lit("")) == "",
+               F.raise_error(F.lit(f"{_EMPTY_KEY} {c!r}")))
+        .otherwise(F.col(_q(c))).alias(c)
+        for c in key_cols
+    ]
+    return df.groupBy(*keys).agg(
         F.sort_array(
-            F.collect_list(F.struct(*[F.col(q(c)) for c in ordered_first]))
+            F.collect_list(F.struct(*[F.col(_q(c)) for c in ordered_first]))
         ).alias("rows")
     )
 
 
-def _stage_and_finalize(
-    env: DataFrame,
+def _place_leaves(
+    envs: list[DataFrame],
     key_cols: list[str],
-    staging: str,
-    place: "callable",
+    place: Callable[[list[str], dict], str],
 ) -> list[str]:
-    """partitionBy staging write (one envelope row per leaf after the
-    repartition → one part file), then the bounded finalize: parse each
-    leaf's single JSON line and hand it to ``place(key_values, doc)``."""
-    # repartition parses string args as expressions — quote like _envelope
-    # (partitionBy takes names verbatim, so it needs no quoting; dotted keys
-    # were already rejected at the _envelope seam)
-    keyq = [F.col("`" + c.replace("`", "``") + "`") for c in key_cols]
-    env.repartition(*keyq).write.mode("overwrite").partitionBy(
-        *key_cols
-    ).json(staging)
+    """Call ``place(key_values, {"rows": [...]})`` once per leaf of the
+    ``_envelope`` frames ``envs``; return the sorted results. Each frame is
+    projected to (keys as strings, ``to_json`` of the rows: the JSON file
+    writer's generator and null-field rule) and the union is streamed with
+    ``toLocalIterator``, so the driver holds one result partition at a time.
+    Payload columns are computed upstream of the envelope shuffles, which
+    (all of them, under AQE) finish before the first leaf is fetched: a row
+    that fails at run time raises before any leaf is placed. A null or
+    empty key fails the same way, re-raised as ValueError naming its column."""
+    leaves = reduce(DataFrame.union, [
+        env.select(
+            *[F.col(_q(k)).cast("string") for k in key_cols],
+            F.to_json(F.struct("rows")),
+        )
+        for env in envs
+    ])
     out: list[str] = []
-    for root, _dirs, files in os.walk(staging):
-        parts = [p for p in files if p.startswith("part-") and p.endswith(".json")]
-        if not parts:
-            continue
-        rel = os.path.relpath(root, staging)
-        # partition dir values are Hive-escaped (%XX for '/', ':', '=' …);
-        # unquote restores the logical value before path assembly
-        from urllib.parse import unquote
-
-        kv = {
-            k: unquote(v)
-            for k, v in (
-                p.split("=", 1) for p in rel.split(os.sep) if "=" in p
-            )
-        }
-        keys = [kv[k] for k in key_cols]
-        docs = []
-        for p in sorted(parts):
-            with open(os.path.join(root, p), encoding="utf-8") as f:
-                docs.extend(json.loads(line) for line in f if line.strip())
-        if len(docs) != 1:
-            raise ValueError(
-                f"expected exactly one envelope row per leaf, got {len(docs)} "
-                f"under {rel} — key columns {key_cols} are not the write grain"
-            )
-        out.append(place(keys, docs[0]))
-    shutil.rmtree(staging)
+    try:
+        for row in leaves.toLocalIterator():
+            out.append(place(list(row[:-1]), json.loads(row[-1])))
+    except SparkRuntimeException as e:
+        msg = (e.getMessageParameters() or {}).get("errorMessage", "")
+        if not msg.startswith(_EMPTY_KEY):
+            raise
+        raise ValueError(msg) from None
     return sorted(out)
 
 
@@ -143,9 +131,6 @@ def write_team_page_tree(
     :data:`PAGE_FILENAME` with the reference's OTHER fallback. Re-running
     replaces files in place (the reference's 🔄 Replaced path). Returns the
     landed file paths."""
-    env = _envelope(df, [team_col, page_col], order_col)
-    staging = os.path.join(base_dir, "_staging_teams")
-
     def place(keys: list[str], doc: dict) -> str:
         team, page = keys
         stem = PAGE_FILENAME.get(page.lower(), "OTHER")
@@ -156,39 +141,65 @@ def write_team_page_tree(
             json.dump(doc, f, indent=2, ensure_ascii=False)
         return path
 
-    return _stage_and_finalize(env, [team_col, page_col], staging, place)
+    keys = [team_col, page_col]
+    return _place_leaves([_envelope(df, keys, order_col)], keys, place)
+
+
+def _write_matchup_docs(
+    frames: "list[tuple[str, DataFrame]]",
+    base_dir: str,
+    *,
+    date_str: str,
+    timestamp: str,
+    matchup_col: str,
+    order_col: str,
+    document: Callable[[str, str, list], dict],
+) -> list[str]:
+    """The props and prompt trees' shared layout: every (prop_type, df) of
+    ``frames`` lands in one pass, one ``document(prop_type, matchup, rows)``
+    per ``<base_dir>/<date>_<matchup>/<prop_type>_<timestamp>.json``."""
+    envs = [
+        _envelope(df, [matchup_col], order_col).select(
+            "*", F.lit(prop_type).alias("__prop_type")
+        )
+        for prop_type, df in frames
+    ]
+
+    def place(keys: list[str], doc: dict) -> str:
+        matchup, prop_type = keys
+        d = os.path.join(base_dir, f"{date_str}_{sanitize_component(matchup)}")
+        os.makedirs(d, exist_ok=True)
+        path = os.path.join(d, f"{prop_type}_{timestamp}.json")
+        with open(path, "w", encoding="utf-8") as f:
+            doc = document(prop_type, matchup, doc["rows"])
+            json.dump(doc, f, indent=2, ensure_ascii=False)
+        return path
+
+    return _place_leaves(envs, [matchup_col, "__prop_type"], place)
 
 
 def write_matchup_tree(
-    df: DataFrame,
+    frames: "list[tuple[str, DataFrame]]",
     base_dir: str,
     *,
     date_str: str,
     timestamp: str,
     matchup_col: str = "matchup",
-    proptype_col: str = "prop_type",
     order_col: str = "row_idx",
     source: str = "Hard Rock Bet",
 ) -> list[str]:
-    """Land ``df`` as the literal props tree:
+    """Land each ``(prop_type, df)`` of ``frames`` as the literal props tree:
     ``<base_dir>/<date>_<matchup>/<proptype>_<timestamp>.json`` with the
     reference's metadata envelope (nba_props_scraper.py:824-860: type,
     match, source/sport/date metadata block). ``timestamp`` is injected
     (the reference stamps now(); a parameter keeps reruns deterministic).
-    Returns the landed file paths."""
-    env = _envelope(df, [matchup_col, proptype_col], order_col)
-    staging = os.path.join(base_dir, "_staging_matchups")
+    All prop types land in one pass. Returns the landed file paths."""
 
-    def place(keys: list[str], doc: dict) -> str:
-        matchup, prop_type = keys
-        folder = f"{date_str}_{sanitize_component(matchup)}"
-        d = os.path.join(base_dir, folder)
-        os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, f"{prop_type}_{timestamp}.json")
-        envelope = {
+    def document(prop_type: str, matchup: str, rows: list) -> dict:
+        return {
             "type": prop_type,
             "match": matchup,
-            "rows": doc["rows"],
+            "rows": rows,
             "metadata": {
                 "source": source,
                 "sport": "NBA",
@@ -197,11 +208,11 @@ def write_matchup_tree(
                 "date": date_str,
             },
         }
-        with open(path, "w", encoding="utf-8") as f:
-            json.dump(envelope, f, indent=2, ensure_ascii=False)
-        return path
 
-    return _stage_and_finalize(env, [matchup_col, proptype_col], staging, place)
+    return _write_matchup_docs(
+        frames, base_dir, date_str=date_str, timestamp=timestamp,
+        matchup_col=matchup_col, order_col=order_col, document=document,
+    )
 
 
 def write_insights_tree(
@@ -223,8 +234,8 @@ def write_insights_tree(
       the one team, ``total_insights`` → its count), exactly the
       reference's per-team override.
 
-    Content path stays distributed (grouped envelope + partitionBy
-    staging); the finalize is bounded by the team dimension. ``metadata``
+    Content path stays distributed (grouped envelope serialized in
+    executors); the leaf pass is bounded by the team dimension. ``metadata``
     carries the run-level block (scrape date, selections) — the caller
     stamps it so reruns are deterministic."""
     if save_mode not in ("combined", "by_team"):
@@ -235,8 +246,6 @@ def write_insights_tree(
     work = df.withColumn(
         key, F.col(team_col) if save_mode == "by_team" else F.lit("all")
     )
-    env = _envelope(work, [key], order_col)
-    staging = os.path.join(base_dir, "_staging_insights")
 
     def place(keys: list[str], doc: dict) -> str:
         rows = doc["rows"]
@@ -261,7 +270,7 @@ def write_insights_tree(
         return path
 
     os.makedirs(base_dir, exist_ok=True)
-    return _stage_and_finalize(env, [key], staging, place)
+    return _place_leaves([_envelope(work, [key], order_col)], [key], place)
 
 
 def _generate_analysis_prompt(data: dict, match_info: str) -> str:
@@ -311,32 +320,32 @@ Data:
 
 
 def write_prompt_tree(
-    df: DataFrame,
+    frames: "list[tuple[str, DataFrame]]",
     base_dir: str,
     *,
     date_str: str,
     timestamp: str,
     matchup_col: str = "matchup",
-    proptype_col: str = "prop_type",
     order_col: str = "row_idx",
     source: str = "Hard Rock Bet",
     url: str | None = None,
 ) -> list[str]:
     """Land the Hard Rock LLM-analysis tree (UD4 + SNK2;
-    hardrock_scraper.py:453-506): the per-matchup folder layout of
+    hardrock_scraper.py:453-506) for each ``(prop_type, df)`` of
+    ``frames``, all in one pass: the per-matchup folder layout of
     :func:`write_matchup_tree` but each document is the ``format_for_llm``
     envelope — ``{"metadata": {...}, "data": {...}, "analysis_prompt":
-    "..."}``. The heavy work — grouping, deterministic row ordering, the
-    partitionBy staging write — is distributed; the analysis prompt itself
-    is rendered at the per-leaf finalize step, where the reference's
+    "..."}``. The heavy work — grouping, deterministic row ordering, JSON
+    serialization — is distributed; the analysis prompt itself is rendered
+    as each leaf is placed, where the reference's
     ``_generate_analysis_prompt`` template (:468-505) is reproduced
     VERBATIM over the exact ``data`` dict stored in the envelope
     (``json.dumps(data, indent=2)``), so downstream prompt consumers see
-    byte-identical documents. The finalize step already round-trips each
-    leaf's single envelope row through the driver to write the JSON file
-    (the SNK2 document grain is bounded by construction), so this adds no
-    driver funnel; the distributed prompt-generation capability itself is
-    exercised by the ``ud4_llm_prompt`` catalog entry.
+    byte-identical documents. Every leaf's single envelope row already
+    passes through the driver to write the JSON file (the SNK2 document
+    grain is bounded by construction), so this adds no driver funnel; the
+    distributed prompt-generation capability itself is exercised by the
+    ``ud4_llm_prompt`` catalog entry.
 
     ``timestamp`` is injected (the reference stamps ``datetime.now()``;
     :468) so reruns are deterministic. Returns the landed file paths.
@@ -349,21 +358,10 @@ def write_prompt_tree(
     'Hard Rock Bet'. That is the reference's own behavior, kept
     deliberately; thread a template parameter here if a non-Hard-Rock
     prompt consumer ever materializes, and break byte-parity knowingly."""
-    env = _envelope(df, [matchup_col, proptype_col], order_col)
-    staging = os.path.join(base_dir, "_staging_prompts")
 
-    def place(keys: list[str], doc: dict) -> str:
-        matchup, prop_type = keys
-        folder = f"{date_str}_{sanitize_component(matchup)}"
-        d = os.path.join(base_dir, folder)
-        os.makedirs(d, exist_ok=True)
-        path = os.path.join(d, f"{prop_type}_{timestamp}.json")
-        data = {
-            "type": prop_type,
-            "match": matchup,
-            "rows": doc["rows"],
-        }
-        envelope = {
+    def document(prop_type: str, matchup: str, rows: list) -> dict:
+        data = {"type": prop_type, "match": matchup, "rows": rows}
+        return {
             "metadata": {
                 "source": source,
                 "scraped_at": timestamp,
@@ -373,11 +371,11 @@ def write_prompt_tree(
             "data": data,
             "analysis_prompt": _generate_analysis_prompt(data, matchup),
         }
-        with open(path, "w", encoding="utf-8") as f:
-            json.dump(envelope, f, indent=2, ensure_ascii=False)
-        return path
 
-    return _stage_and_finalize(env, [matchup_col, proptype_col], staging, place)
+    return _write_matchup_docs(
+        frames, base_dir, date_str=date_str, timestamp=timestamp,
+        matchup_col=matchup_col, order_col=order_col, document=document,
+    )
 
 
 def write_dvp_matrix_doc(
@@ -397,20 +395,18 @@ def write_dvp_matrix_doc(
     ingestion row index — the reference's DOM order) and the order column
     is then dropped so rows carry exactly the reference's keys.
 
-    Content path stays distributed (grouped envelope + partitionBy
-    staging); the finalize assembles 5 positions × 4 timeframes leaf docs
-    — dimension grain, each leaf 30 team rows — before one driver-side
-    ``json.dump``. ``metadata`` is caller-stamped (the reference stamps
-    ``datetime.now()``; a parameter keeps reruns deterministic) and is
-    completed with the positions/timeframes actually landed."""
+    Content path stays distributed (grouped envelope serialized in
+    executors); the leaf pass assembles 5 positions × 4 timeframes leaf
+    docs — dimension grain, each leaf 30 team rows — before one
+    driver-side ``json.dump``. ``metadata`` is caller-stamped (the
+    reference stamps ``datetime.now()``; a parameter keeps reruns
+    deterministic) and is completed with the positions/timeframes actually landed."""
     # group on COPIES of the cell keys so every row keeps its own
     # Position/Timeframe fields, like the reference's to_json_obj rows
     # (DEFENSEVSPOSTION.PY:142-152)
     work = df.withColumn("__pos", F.col(position_col)).withColumn(
         "__tf", F.col(timeframe_col)
     )
-    env = _envelope(work, ["__pos", "__tf"], order_col)
-    staging = os.path.join(base_dir, "_staging_dvp")
     data: dict[str, dict[str, list]] = {}
 
     def place(keys: list[str], doc: dict) -> str:
@@ -422,7 +418,8 @@ def write_dvp_matrix_doc(
         return f"{pos}/{tf}"
 
     os.makedirs(base_dir, exist_ok=True)
-    _stage_and_finalize(env, ["__pos", "__tf"], staging, place)
+    keys = ["__pos", "__tf"]
+    _place_leaves([_envelope(work, keys, order_col)], keys, place)
     # key order inside the document follows the reference's walk order
     # (POSITIONS then TIMEFRAMES, DEFENSEVSPOSTION.PY:64-66), not sort order
     from nba_data_pipeline_spark.operators.dvp import (
@@ -471,40 +468,41 @@ def write_team_stats_tree(
     (tables have heterogeneous schemas, so a single unioned frame would
     force a lossy common schema; the per-table grain is the reference's).
 
-    Content stays distributed per table (grouped envelope + partitionBy
-    staging). The finalize touches O(#teams × #tables) FILES but holds at
-    most ONE (team, table) envelope in driver memory at a time: each
-    ``place()`` spills its doc straight to a per-team partial file, and the
-    merge streams one team's partials into its final JSON before moving to
-    the next team — the envelope docs carry fact-grain rows (every
-    customer/supplier row per nation in the SNK13 lane), so accumulating
-    all of them in one dict is exactly the co-resident driver peak the
-    deep-SF sweeps kill boxes with. A table with no rows for a team is
-    simply absent from that team's document, like the reference's
-    ``continue`` on empty extracts."""
+    Content stays distributed (one grouped envelope per table, serialized
+    in executors; all tables land in one pass). The leaf pass touches
+    O(#teams × #tables) FILES but holds one (team, table) envelope in
+    Python at a time: each ``place()`` spills its rows to a per-team partial
+    file, and the merge streams one team's partials into its final JSON
+    before moving to the next team — the envelopes carry fact-grain rows
+    (every customer/supplier row per nation in the SNK13 lane), so one dict
+    of all of them is the driver peak deep-SF sweeps kill boxes with. A
+    table with no rows for a team is simply absent from that team's
+    document, like the reference's ``continue`` on empty extracts."""
     os.makedirs(base_dir, exist_ok=True)
     partial_root = os.path.join(base_dir, "_partial_bref")
-    if os.path.isdir(partial_root):
-        shutil.rmtree(partial_root)
+    shutil.rmtree(partial_root, ignore_errors=True)
     # sanitized dir -> raw team name (final filename uses the raw name)
     team_names: dict[str, str] = {}
-    for idx, (friendly, df) in enumerate(frames):
-        env = _envelope(df, [team_col], order_col)
-        staging = os.path.join(base_dir, "_staging_bref")
 
-        def place(keys: list[str], doc: dict, _friendly=friendly, _idx=idx) -> str:
-            team = keys[0]
-            safe = sanitize_component(team)
-            team_names.setdefault(safe, team)
-            d = os.path.join(partial_root, safe)
-            os.makedirs(d, exist_ok=True)
-            # idx prefix preserves the caller's tables_to_extract walk order
-            part = os.path.join(d, f"{_idx:04d}_{sanitize_component(_friendly)}.json")
-            with open(part, "w", encoding="utf-8") as f:
-                json.dump({"friendly": _friendly, "rows": doc["rows"]}, f)
-            return team
+    def place(keys: list[str], doc: dict) -> str:
+        idx, team = keys
+        safe = sanitize_component(team)
+        team_names.setdefault(safe, team)
+        d = os.path.join(partial_root, safe)
+        os.makedirs(d, exist_ok=True)
+        # the table index names the partial: sorted, it is the caller's
+        # tables_to_extract walk order
+        with open(os.path.join(d, f"{int(idx):04d}.json"), "w") as f:
+            json.dump(doc["rows"], f)
+        return team
 
-        _stage_and_finalize(env, [team_col], staging, place)
+    envs = [
+        _envelope(df, [team_col], order_col).select(
+            F.lit(idx).alias("__table"), "*"
+        )
+        for idx, (_friendly, df) in enumerate(frames)
+    ]
+    _place_leaves(envs, ["__table", team_col], place)
 
     out: list[str] = []
     for safe in sorted(team_names):
@@ -517,18 +515,17 @@ def write_team_stats_tree(
         with open(path, "w", encoding="utf-8") as f:
             f.write("{")
             for i, part in enumerate(sorted(os.listdir(pdir))):
-                with open(os.path.join(pdir, part), encoding="utf-8") as pf:
-                    payload = json.load(pf)
+                with open(os.path.join(pdir, part)) as pf:
+                    rows = json.load(pf)
                 if i:
                     f.write(",")
                 f.write("\n")
-                body = json.dumps(
-                    payload["rows"], indent=2, ensure_ascii=False
-                )
+                body = json.dumps(rows, indent=2, ensure_ascii=False)
                 # re-indent the value block to match the top-level document
                 body = body.replace("\n", "\n  ")
-                f.write(f'  {json.dumps(payload["friendly"])}: {body}')
+                friendly = frames[int(part[:-5])][0]
+                f.write(f'  {json.dumps(friendly)}: {body}')
             f.write("\n}")
         out.append(path)
-    shutil.rmtree(partial_root)
+    shutil.rmtree(partial_root, ignore_errors=True)
     return out

@@ -6,6 +6,7 @@ Cleaning_Glass_Multi.py:716-739) and its literal output trees
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
@@ -19,6 +20,8 @@ from nba_data_pipeline_spark.cli import (
     resolve_team_list,
 )
 from nba_data_pipeline_spark.sinks_ref import sanitize_component
+
+from .conftest import SF_DIR
 
 
 # ---------------------------------------------------------------------------
@@ -96,6 +99,31 @@ def _relpaths(root: str) -> set[str]:
     return out
 
 
+def _tree_sha256(root: str) -> str:
+    """One digest over every file's relative path and bytes: a reordered
+    key, a changed indent or a dropped null field anywhere moves it."""
+    h = hashlib.sha256()
+    for rel in sorted(_relpaths(root)):
+        with open(os.path.join(root, rel), "rb") as f:
+            h.update(rel.encode() + b"\0" + hashlib.sha256(f.read()).digest())
+    return h.hexdigest()
+
+
+#: Byte-identity pins of the full CLI trees, taken from the staged
+#: partitionBy writer these trees were first landed with.
+SCRAPE_TEAMS_TREE_SHA256 = (
+    "c0e7e780e42c4275d0aebdf7ebc3f85726cf2df0cc287a66e3278947c6e5edae"
+)
+PROPS_BOTH_TREE_SHA256 = (
+    "ef684779de3da1d35c04718b744c66f1f0af939bda9687a7503213b34fc4eca9"
+)
+
+PROPS_BOTH_ARGV = [
+    "props", "--date", "2026-02-01", "--prop-type", "both",
+    "--run-ts", "20260201_120000", "--sf-dir", SF_DIR,
+]
+
+
 def test_scrape_teams_golden_tree(spark, tmp_path):
     out = str(tmp_path / "teams")
     rc = main(
@@ -117,6 +145,7 @@ def test_scrape_teams_golden_tree(spark, tmp_path):
     assert [r["row_idx"] for r in doc["rows"]] == list(range(8))
     assert doc["rows"][0]["Player"] == "DET Player 1"
     assert set(doc["rows"][0]) == {"row_idx", "Player", "PTS", "REB", "AST"}
+    assert _tree_sha256(out) == SCRAPE_TEAMS_TREE_SHA256
 
     # rerun replaces in place (the reference's 🔄 Replaced path)
     rc = main(
@@ -130,13 +159,9 @@ def test_scrape_teams_golden_tree(spark, tmp_path):
 
 def test_props_golden_tree(spark, tmp_path):
     out = str(tmp_path / "props")
-    rc = main(
-        [
-            "props", "--date", "2026-02-01", "--prop-type", "both",
-            "--output", out, "--run-ts", "20260201_120000",
-        ]
-    )
+    rc = main([*PROPS_BOTH_ARGV, "--output", out])
     assert rc == 0
+    assert _tree_sha256(out) == PROPS_BOTH_TREE_SHA256
     rels = _relpaths(out)
     # 30 deterministic matchups × {player, game}
     assert len(rels) == 60
@@ -153,6 +178,72 @@ def test_props_golden_tree(spark, tmp_path):
     )
     g0 = game["rows"][0]
     assert g0["spread_team"] == "BKN" and g0["total"] == 201.5
+
+
+def test_props_both_job_count(spark, tmp_path):
+    """Both prop types land in one streamed pass: 5 jobs on a local session,
+    where the staged partitionBy writer (one staging write and driver
+    re-read per prop type) launched 8."""
+    sc = spark.sparkContext
+    sc.setJobGroup("test_props_both_job_count", "props --prop-type both")
+    try:
+        assert main([*PROPS_BOTH_ARGV, "--output", str(tmp_path / "p")]) == 0
+        jobs = sc.statusTracker().getJobIdsForGroup("test_props_both_job_count")
+    finally:
+        sc._jsc.clearJobGroup()
+    assert 0 < len(jobs) < 8
+
+
+def test_leaf_key_null_or_empty_raises(spark, tmp_path):
+    """A null or empty key would become a path component; the sink names
+    the column and lands nothing."""
+    from nba_data_pipeline_spark.sinks_ref import write_team_page_tree
+
+    for bad in (None, ""):
+        df = spark.createDataFrame(
+            [("DET", "players", 0, 1), (bad, "players", 1, 2)],
+            "team string, page string, row_idx int, PTS int",
+        )
+        out = str(tmp_path / f"t{bad!r}")
+        with pytest.raises(ValueError, match="column 'team'"):
+            write_team_page_tree(df, out, date_str="2026-02-01")
+        assert _relpaths(out) == set()
+
+
+def test_failing_row_lands_nothing(spark, tmp_path):
+    """A row that fails at run time fails the write before any leaf is
+    placed — also when only the second of two prop types fails, since every
+    envelope shuffle finishes before the first leaf is fetched."""
+    from pyspark.sql import functions as F
+
+    from nba_data_pipeline_spark.sinks_ref import (
+        write_matchup_tree,
+        write_team_page_tree,
+    )
+
+    rows = [(f"T{i % 3}", i, i * 10) for i in range(12)]
+    good = spark.createDataFrame(rows, "matchup string, row_idx int, v int")
+    bad = good.withColumn(
+        "v",
+        F.when(F.col("row_idx") == 7, F.raise_error(F.lit("row 7 is broken")))
+        .otherwise(F.col("v")),
+    )
+    out = str(tmp_path / "props")
+    with pytest.raises(Exception, match="row 7 is broken"):
+        write_matchup_tree(
+            [("player", good), ("game", bad)], out,
+            date_str="2026-02-01", timestamp="20260201_120000",
+        )
+    assert _relpaths(out) == set()
+
+    pages = bad.select(
+        F.col("matchup").alias("team"), F.lit("players").alias("page"),
+        "row_idx", "v",
+    )
+    out = str(tmp_path / "teams")
+    with pytest.raises(Exception, match="row 7 is broken"):
+        write_team_page_tree(pages, out, date_str="2026-02-01")
+    assert _relpaths(out) == set()
 
 
 def test_props_player_only_writes_half_the_tree(spark, tmp_path):
